@@ -530,9 +530,9 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
     # monkeypatch + tmp_path (ADVICE r12): env var and state dir are
     # cleaned up even when an assertion below fails
     monkeypatch.setenv("SPARK_GRAFT_WARM_STATE_DIR", str(tmp_path))
-    # populate the session memo FIRST so the cache-substitution
-    # hazard is live during the check
-    wallet_transactions(spark, SF_MEDIUM).count()
+    # populate the session memo FIRST (the runner's consumers=2 read)
+    # so the cache-substitution hazard is live during the check
+    wallet_transactions(spark, SF_MEDIUM, consumers=2).count()
     inc.reset_lpa_warm_memo(spark)
     try:
         for fn in (
@@ -564,12 +564,16 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
 
 def test_delta_scan_prunes_date_partitions(spark, tmp_path):
     """On a date-partitioned events store (write_partitioned's layout),
-    the warm tier's delta builder must mirror its ts bound onto the
-    partition column so the scan prunes whole partition DIRECTORIES —
-    row-group stats alone cannot shrink the file listing, and at 100 TB
-    the listing IS the cost (VERDICT r12 #3)."""
+    a ``since`` leg read must mirror its ts bound onto the partition
+    column so the scan prunes whole partition DIRECTORIES — row-group
+    stats alone cannot shrink the file listing, and at 100 TB the
+    listing IS the cost (VERDICT r12 #3). It must also never read the
+    session's cached full build, even when one exists for the input."""
+    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
+        reset_session_memos,
+    )
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_delta,
+        wallet_transactions,
     )
     from wallet_and_risky_features_data_pipeline_spark.sources.readers import (
         read_table,
@@ -589,8 +593,12 @@ def test_delta_scan_prunes_date_partitions(spark, tmp_path):
     write_partitioned(ev, store, mode="overwrite")
 
     since = "2024-01-28"
-    delta = wallet_transactions_delta(spark, str(tmp_path), since)
+    # the full-width memo for this input exists: the hazard is live
+    wallet_transactions(spark, str(tmp_path), consumers=2)
+    delta = wallet_transactions(spark, str(tmp_path), since=since)
     plan = _physical(delta)
+    reset_session_memos(spark)
+    assert "InMemoryTableScan" not in plan, "the since read used the cache"
     scan = [l for l in plan.splitlines() if "Scan parquet" in l]
     assert scan, "no parquet scan in the delta plan"
     # partition pruning is visible as a PartitionFilters entry naming
@@ -609,24 +617,35 @@ def test_delta_scan_prunes_date_partitions(spark, tmp_path):
     assert got == want
 
 
-def test_single_consumer_plans_stream_without_memo_cache(spark):
-    """The lazy leg-build discipline (VERDICT r13 #5): a plan that
-    consumes the role-exploded legs exactly once must NOT read through
-    the memo's InMemoryRelation when the session memo is cold — the
-    cache write + read-back costs ~2× the build it fronts. And the
-    OPPORTUNISTIC readers (flagship chain) must flip to the shared
-    memo frame once a nightly session has warmed it, without building
-    it themselves."""
+def test_single_consumer_plans_stream_without_memo_cache(spark, tmp_path, monkeypatch):
+    """The leg-source contract (VERDICT r13 #5): a plan that consumes
+    the role-exploded legs exactly once must NOT read through a cache
+    when the session is cold — the cache write + read-back costs ~2×
+    the build it fronts. A ``consumers > 1`` narrowed read caches only
+    its own columns and is released by ``cache_scope``. Once a nightly
+    session has warmed the full table (``consumers=2``), every lazy
+    leg reader shares it through the CacheManager without building it
+    itself. A warm face run inside ``cache_scope`` leaves no leg
+    persist behind."""
+    from pyspark import StorageLevel
+
+    from wallet_and_risky_features_data_pipeline_spark.caching import cache_scope
+    from wallet_and_risky_features_data_pipeline_spark.plans import (
+        incremental_plans as inc,
+    )
     from wallet_and_risky_features_data_pipeline_spark.plans import wallet_model as wm
     from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
         reset_session_memos,
     )
+
+    from .conftest import SF_SMALL
 
     reset_session_memos(spark)
     for name in (
         "window_ordering",
         "window_partition_totals",
         "window_lead_auc",
+        "window_running_balance_eth",
         "dq_feature_constraints",
         "wallet_features",
         "wallet_coin_balances",
@@ -637,7 +656,7 @@ def test_single_consumer_plans_stream_without_memo_cache(spark):
         )
     # window_running_balance_salted left the no-cache list in r16: its
     # input is consumed TWICE (chunk windows + the totals join-back),
-    # so it now deliberately persists the PROJECTED nine-column frame —
+    # so it deliberately persists the PROJECTED nine-column frame —
     # a query-scoped cache, NOT the full-width memo. Pin both halves:
     # the cache exists, and it is the narrow frame (no wt-memo columns
     # like current_value/transaction_type in the cached relation).
@@ -649,15 +668,40 @@ def test_single_consumer_plans_stream_without_memo_cache(spark):
     assert "current_value" not in cached_schema, (
         "salted cache carries full-width legs — the projection regressed"
     )
+    # a consumers=2 narrowed read caches exactly its own columns, and
+    # cache_scope takes it out of the CacheManager on exit
+    with cache_scope():
+        narrow = wm.wallet_transactions(
+            spark, SF_MEDIUM, ["wallet_address", "ts"], where=wm.SENDER_EDGE,
+            consumers=2,
+        )
+        assert narrow.storageLevel.useMemory
+        cached = _physical(narrow).split("InMemoryTableScan", 1)[1].split("\n")[0]
+        assert "wallet_address" in cached and "ts" in cached
+        assert "interacted_with" not in cached and "address_role" not in cached
+    assert narrow.storageLevel == StorageLevel.NONE, "cache_scope left it cached"
     # merely PLANNING the queries above must not have built the memo
     with wm._WT_LOCK:
         assert SF_MEDIUM not in wm._WT_MEMO.get(spark, {})
 
     # warm the memo the way a nightly (runner.run_features) does...
-    wm.wallet_transactions(spark, SF_MEDIUM)
-    # ...and the opportunistic chain now shares it
-    plan = _physical(QUERIES["wallet_features"](spark, SF_MEDIUM))
-    assert "InMemoryTableScan" in plan, (
-        "flagship did not share the warmed nightly leg table"
-    )
+    wm.wallet_transactions(spark, SF_MEDIUM, consumers=2)
+    # ...and the single-consumer readers now share it
+    for name in ("wallet_features", "window_ordering"):
+        plan = _physical(QUERIES[name](spark, SF_MEDIUM))
+        assert "InMemoryTableScan" in plan, (
+            f"{name} did not share the warmed nightly leg table"
+        )
     reset_session_memos(spark)
+
+    # a warm face builds its stored state from single-consumer reads:
+    # nothing session-level (memo or full-width persist) outlives it
+    monkeypatch.setenv("SPARK_GRAFT_WARM_STATE_DIR", str(tmp_path))
+    with cache_scope():
+        inc.wallet_coin_balances_warm(spark, SF_SMALL).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    with wm._WT_LOCK:
+        assert not wm._WT_MEMO.get(spark), "a warm face built the leg memo"
+    legs = wm.wallet_transactions(spark, SF_SMALL)
+    assert legs.storageLevel == StorageLevel.NONE, "a leg persist outlived the scope"

@@ -319,10 +319,11 @@ def test_doc_quality_lr_matches_golden(spark):
 
 
 def test_wallet_transactions_memoized_per_session(spark):
-    """The leg table memo: same (session, sf_dir) returns the SAME
-    persisted frame (the dozen wallet-family queries share one scan +
-    explosion per session); blacklisted variants bypass it; reset
-    drops it."""
+    """The leg table memo: ``consumers > 1`` on the full table returns
+    the SAME persisted frame per (session, sf_dir); a single-consumer
+    read never persists but is served from the memo by the
+    CacheManager once it exists; a ``where`` (the hot-wallet guard)
+    drops its rows; reset drops the memo."""
     from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
         reset_session_memos,
     )
@@ -331,15 +332,54 @@ def test_wallet_transactions_memoized_per_session(spark):
     )
 
     reset_session_memos(spark)
-    a = wallet_transactions(spark, "/root/testdata/sf0.001")
-    b = wallet_transactions(spark, "/root/testdata/sf0.001")
+    assert not wallet_transactions(spark, SF_SMALL).storageLevel.useMemory
+    a = wallet_transactions(spark, SF_SMALL, consumers=2)
+    b = wallet_transactions(spark, SF_SMALL, consumers=2)
     assert a is b
     assert a.storageLevel.useMemory
-    black = wallet_transactions(spark, "/root/testdata/sf0.001", blacklist=("7",))
-    assert black is not a
+    assert wallet_transactions(spark, SF_SMALL).storageLevel.useMemory
+    hot = wallet_transactions(
+        spark, SF_SMALL, where=~F.col("wallet_address").isin("7")
+    )
+    assert hot.filter(F.col("wallet_address") == "7").count() == 0
+    assert a.filter(F.col("wallet_address") == "7").count() > 0
     reset_session_memos(spark)
-    c = wallet_transactions(spark, "/root/testdata/sf0.001")
+    c = wallet_transactions(spark, SF_SMALL, consumers=2)
     assert c is not a
+    reset_session_memos(spark)
+
+
+def test_wallet_transactions_memo_rejects_rewritten_input(spark, tmp_path):
+    """The memo's immutable-input rule is checked: rewriting the events
+    table after the memo was built makes the next read raise, naming
+    the path and the reset to call, instead of serving stale legs."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
+        reset_session_memos,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
+        wallet_transactions,
+    )
+
+    src = f"{SF_SMALL}/events.parquet"
+    dst = tmp_path / "events.parquet"
+    shutil.copyfile(src, dst)
+    dst.chmod(0o644)
+    sf_dir = str(tmp_path)
+    n_all = wallet_transactions(spark, sf_dir, consumers=2).count()
+    table = pq.read_table(src)
+    pq.write_table(table.slice(0, table.num_rows // 2), dst)
+    try:
+        with pytest.raises(RuntimeError, match="reset_session_memos") as err:
+            wallet_transactions(spark, sf_dir)
+        assert f"{sf_dir}/events.parquet" in str(err.value)
+        reset_session_memos(spark)
+        assert wallet_transactions(spark, sf_dir).count() < n_all
+    finally:
+        reset_session_memos(spark)
 
 
 def test_entity_hot_block_collapses_before_fuzzy_match(spark, tmp_path):
@@ -649,6 +689,7 @@ def test_kcore_invariants_and_maximality(spark):
         wallet_kcore,
     )
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
+        SENDER_EDGE,
         wallet_transactions,
     )
 
@@ -656,12 +697,8 @@ def test_kcore_invariants_and_maximality(spark):
     assert (res.loc[res.in_core == 1, "core_degree"] >= KCORE_K).all()
     assert (res.loc[res.in_core == 0, "core_degree"] == 0).all()
 
-    wt = wallet_transactions(spark, SF_SMALL)
     legs = (
-        wt.filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        )
+        wallet_transactions(spark, SF_SMALL, where=SENDER_EDGE)
         .select(
             F.col("wallet_address").cast("bigint").alias("u"),
             F.col("interacted_with").cast("bigint").alias("v"),

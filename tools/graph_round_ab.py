@@ -42,6 +42,7 @@ from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
 )
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
 from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
+    SENDER_EDGE,
     wallet_transactions,
 )
 from wallet_and_risky_features_data_pipeline_spark.session import get_spark
@@ -51,10 +52,8 @@ RUNS = int(os.environ.get("GRAPH_AB_RUNS", "3"))
 
 
 def _taint_edges_seeds(spark: SparkSession):
-    wt = wallet_transactions(spark, SF_DIR)
-    legs = wt.filter(
-        (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    )
+    wt = wallet_transactions(spark, SF_DIR, consumers=2)
+    legs = wt.filter(SENDER_EDGE)
     edges = legs.select(
         F.col("wallet_address").alias("src"),
         F.col("interacted_with").alias("dst"),
@@ -306,14 +305,8 @@ def lpa_dpart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
         _lpa_rounds,
     )
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_shared_or_lazy,
-    )
-
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR)
-    legs = wt.filter(
-        (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    ).select(
+    wt = wallet_transactions(spark, SF_DIR)
+    legs = wt.filter(SENDER_EDGE).select(
         F.col("wallet_address").cast("bigint").alias("u"),
         F.col("interacted_with").cast("bigint").alias("v"),
     )
@@ -346,14 +339,8 @@ def pagerank_srcpart(spark: SparkSession, sf_dir: str) -> DataFrame:
         PR_SCALE,
         PR_ITERS,
     )
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_shared_or_lazy,
-    )
-
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR)
-    legs = wt.filter(
-        (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    )
+    wt = wallet_transactions(spark, SF_DIR)
+    legs = wt.filter(SENDER_EDGE)
     edges = persist_tracked(
         legs.select(
             F.col("wallet_address").alias("src"),
@@ -410,14 +397,8 @@ def taint_composed_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eager wt memo — wt feeds two derived frames here (edges +
     seeds), so this arm measures whether two lazy explosion passes
     beat one cache write + two cache reads."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_shared_or_lazy,
-    )
-
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR)
-    legs = wt.filter(
-        (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    )
+    wt = wallet_transactions(spark, SF_DIR)
+    legs = wt.filter(SENDER_EDGE)
     edges = legs.select(
         F.col("wallet_address").alias("src"),
         F.col("interacted_with").alias("dst"),
@@ -496,14 +477,8 @@ def motifs_oldfence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def taint_lazy_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy legs + the registry's per-round persists — isolates how
     much of taint_composed_lazy's win is the lazy leg build alone."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_shared_or_lazy,
-    )
-
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR)
-    legs = wt.filter(
-        (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    )
+    wt = wallet_transactions(spark, SF_DIR)
+    legs = wt.filter(SENDER_EDGE)
     edges = legs.select(
         F.col("wallet_address").alias("src"),
         F.col("interacted_with").alias("dst"),
@@ -537,14 +512,8 @@ def taint_lazy_edges_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round persists): bounds recomputation at any scale — the
     explosion streams twice (edges + seeds), the rounds read the
     cached |E| table, and no round pays a cache write."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_shared_or_lazy,
-    )
-
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR)
-    legs = wt.filter(
-        (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    )
+    wt = wallet_transactions(spark, SF_DIR)
+    legs = wt.filter(SENDER_EDGE)
     edges = persist_tracked(
         legs.select(
             F.col("wallet_address").alias("src"),
@@ -649,15 +618,10 @@ def motifs_narrowcache(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading the full-width explosion memo — the motif chain's four leg
     consumers (two fence aggs, two hop streams) then read a cache that
     carries only what they use."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_shared_or_lazy,
-    )
-
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR)
+    wt = wallet_transactions(spark, SF_DIR)
     legs = persist_tracked(
         wt.filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
+            F.expr(SENDER_EDGE)
             & (F.col("current_value") > 0)
         ).select(
             "event_id",
@@ -695,14 +659,13 @@ def runbal_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
         ORDER_COLS,
         by_wallet,
-        wallet_transactions_shared_or_lazy,
     )
     from wallet_and_risky_features_data_pipeline_spark.plans.windows_plans import (
         HOT_KEY_THRESHOLD,
         _KEY,
     )
 
-    wt = wallet_transactions_shared_or_lazy(spark, SF_DIR).select(
+    wt = wallet_transactions(spark, SF_DIR).select(
         "event_id", "ts", "priority", "transaction_index", "role_rank",
         "wallet_address", "contract_address", "address_role", "signed_value",
     )

@@ -365,7 +365,7 @@ def local_delta_probe(spark) -> None:
         # write_partitioned layout), rebuild the warm state for that
         # input once, and time the refresh reading from it — the
         # deployed shape where the ts >= split predicate prunes whole
-        # partition DIRECTORIES (wallet_transactions_delta mirrors the
+        # partition DIRECTORIES (wallet_transactions(since=) mirrors the
         # bound onto date_partition), not just row groups.
         from wallet_and_risky_features_data_pipeline_spark.sources.readers import (
             read_table,

@@ -524,18 +524,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8,
-    max_df: int = 100,
-) -> DataFrame:
-    """Containment pairs ≥ threshold via the shared df-capped pair
-    core — same candidate-pair bound and in-row measure as
-    ``ngram_jaccard_pairs`` (see ``ngram_sized_pairs``)."""
-    return containment_pairs_from_capped(
-        ngram_capped_shingles(df, id_col, text_col, n, max_df), threshold
-    )
-
-
 # Integer-quantization recipe shared by the vector dedup family —
 # quantize to BIGINT at 1e-6 BEFORE the dot product so dot and norms
 # are pure integer arithmetic and the cosine is one integer-double

@@ -26,11 +26,7 @@ from ..streaming.incremental import (
 )
 from .risk_features import WALLET_AUC_ROLLUP_ORACLE
 from .wallet_features import contract_state_from
-from .wallet_model import (
-    wallet_transactions,
-    wallet_transactions_delta,
-    wallet_transactions_shared_or_lazy,
-)
+from .wallet_model import SENDER_EDGE, wallet_transactions
 from .windows_plans import WALLET_COIN_BALANCES_ORACLE
 
 SPLIT_AT = "2024-01-15"
@@ -40,7 +36,7 @@ LPA_SPLIT_AT = "2024-01-28"
 
 
 def wallet_coin_balances_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
     prior = contract_state_from(wt.filter(F.col("ts") < split))
     merged = incremental_contract_state(prior, wt.filter(F.col("ts") >= split))
@@ -78,7 +74,7 @@ def wallet_auc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-query, distinct from ``_warm``'s delta-only pushdown scan."""
     from ..sources.writers import read_store
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
     prior = read_store(spark, _ensure_auc_state(spark, sf_dir))
     return incremental_auc_rollup(prior, wt.filter(F.col("ts") >= split))
@@ -118,18 +114,15 @@ def wallet_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     entry point (pinned by
     ``test_cc_incremental_cold_store_builds_in_query_and_equals_full``).
     What distinguishes this variant from ``_warm``: the new edges come
-    from the session's shared FULL-history leg table filtered in-query
-    (the proof-tier read), where the warm variant scans only the
-    ``ts >= split`` delta through the lazy pushdown builder.
+    from the FULL-history leg table filtered in-query (the proof-tier
+    read), where the warm variant scans only the ``ts >= split`` delta
+    through ``since=``.
     """
     from ..operators.dedup import connected_components
     from ..caching import persist_tracked
     from ..sources.writers import read_store
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
-    sender = (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-
     prior = read_store(spark, _ensure_cc_state(spark, sf_dir))
     # node → root, self-roots dropped (a root's membership rides on any
     # neighbor's star edge; isolated-in-old nodes re-enter via new
@@ -138,7 +131,9 @@ def wallet_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("wallet_address").alias("w_a"), F.col("cluster_id").alias("w_b")
     )
     new_edges = (
-        wt.filter(sender & (F.col("ts") >= split))
+        wallet_transactions(
+            spark, sf_dir, where=F.expr(SENDER_EDGE) & (F.col("ts") >= split)
+        )
         .select(
             F.col("wallet_address").alias("w_a"),
             F.col("interacted_with").alias("w_b"),
@@ -228,16 +223,11 @@ def wallet_rolling_distinct_incremental(
     7 days of the day-grain table, never history. Held to the FULL-
     recompute oracle (J15/W11 discipline).
     """
-    from ..plans.wallet_model import wallet_transactions as _wt
     from .risk_features import wallet_rolling_distinct_7d  # noqa: F401
 
-    wt = _wt(spark, sf_dir)
     split_day = F.lit(SPLIT_AT).cast("date")
     dg = (
-        wt.filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        )
+        wallet_transactions(spark, sf_dir, where=SENDER_EDGE)
         .select(
             "wallet_address",
             F.col("interacted_with").alias("counterparty"),
@@ -301,8 +291,7 @@ def _lpa_legs(wt: DataFrame) -> DataFrame:
     """Undirected edge legs of the counterparty graph: sender rows →
     (a, b) = (min, max) of the two endpoints, self-loops dropped. The
     one leg definition every LPA family member derives from."""
-    sender = (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
-    legs = wt.filter(sender).select(
+    legs = wt.filter(SENDER_EDGE).select(
         F.col("wallet_address").cast("bigint").alias("u"),
         F.col("interacted_with").cast("bigint").alias("v"),
         "ts",
@@ -322,7 +311,7 @@ def _lpa_edge_tables(spark: SparkSession, sf_dir: str):
     materialization."""
     from ..caching import persist_tracked
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     pairs = persist_tracked(
         _lpa_legs(wt).groupBy("a", "b").agg(F.min("ts").alias("first_seen"))
     )
@@ -802,8 +791,8 @@ def _lpa_warm_final(spark: SparkSession, sf_dir: str):
     CacheManager pushdown trap, state-file parallelism, exponential
     frontier lineage, the adaptive restart-vs-frontier switch) and
     the final local-delta probe table: warm/full 0.30 at sf0.1,
-    0.44 at 100× local delta. Memoized per (session, sf_dir) like
-    ``wallet_transactions``: the warm LPA partition and the
+    0.44 at 100× local delta. Memoized per (session, sf_dir) like the
+    leg table: the warm LPA partition and the
     incremental modularity evaluation share one refresh, exactly as
     a deployed nightly would."""
     with _LPA_WARM_LOCK:
@@ -843,12 +832,10 @@ def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
     sym_old = stored.filter(F.col("round") == -1).select(
         F.col("node").alias("s"), F.col("lbl").alias("d")
     )
-    # delta-only source scan: ts ≥ split on the LAZY builder so the
-    # predicate reaches the events scan (the memoized table's persist()
-    # would materialize the FULL explosion first — wallet_model.
-    # wallet_transactions_delta documents the trap)
+    # delta-only source scan: ``since`` puts ts ≥ split on the events
+    # scan itself, so the cached FULL explosion can never stand in
     delta_pairs = persist_tracked(
-        _lpa_legs(wallet_transactions_delta(spark, sf_dir, LPA_SPLIT_AT))
+        _lpa_legs(wallet_transactions(spark, sf_dir, since=LPA_SPLIT_AT))
         .select("a", "b")
         .distinct()
     )
@@ -1052,7 +1039,7 @@ def wallet_coin_balances_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prior = read_store(spark, _ensure_contract_state(spark, sf_dir))
     merged = incremental_contract_state(
-        prior, wallet_transactions_delta(spark, sf_dir, SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SPLIT_AT)
     )
     return _coin_balances_projection(merged)
 
@@ -1084,7 +1071,7 @@ def wallet_coin_balances_warm_scaled(spark: SparkSession, sf_dir: str) -> DataFr
         spark, _ensure_contract_state(spark, sf_dir, split_at=SCALED_SPLIT_AT)
     )
     merged = incremental_contract_state(
-        prior, wallet_transactions_delta(spark, sf_dir, SCALED_SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SCALED_SPLIT_AT)
     )
     return _coin_balances_projection(merged)
 
@@ -1129,7 +1116,7 @@ def wallet_auc_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prior = read_store(spark, _ensure_auc_state(spark, sf_dir))
     return incremental_auc_rollup(
-        prior, wallet_transactions_delta(spark, sf_dir, SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SPLIT_AT)
     )
 
 
@@ -1148,7 +1135,7 @@ def wallet_auc_warm_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _ensure_auc_state(spark, sf_dir, split_at=SCALED_SPLIT_AT)
     )
     return incremental_auc_rollup(
-        prior, wallet_transactions_delta(spark, sf_dir, SCALED_SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SCALED_SPLIT_AT)
     )
 
 
@@ -1170,13 +1157,11 @@ def _ensure_cc_state(spark: SparkSession, sf_dir: str) -> str:
     from ..caching import persist_tracked
 
     def build():
-        wt = wallet_transactions(spark, sf_dir)
         split = F.lit(SPLIT_AT).cast("timestamp")
-        sender = (
-            F.col("address_role") == "sender"
-        ) & F.col("interacted_with").isNotNull()
         old_edges = persist_tracked(
-            wt.filter(sender & (F.col("ts") < split))
+            wallet_transactions(
+                spark, sf_dir, where=F.expr(SENDER_EDGE) & (F.col("ts") < split)
+            )
             .select(
                 F.col("wallet_address").alias("w_a"),
                 F.col("interacted_with").alias("w_b"),
@@ -1216,12 +1201,8 @@ def wallet_components_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     star = prior.filter(F.col("wallet_address") != F.col("cluster_id")).select(
         F.col("wallet_address").alias("w_a"), F.col("cluster_id").alias("w_b")
     )
-    sender = (
-        F.col("address_role") == "sender"
-    ) & F.col("interacted_with").isNotNull()
     new_edges = (
-        wallet_transactions_delta(spark, sf_dir, SPLIT_AT)
-        .filter(sender)
+        wallet_transactions(spark, sf_dir, where=SENDER_EDGE, since=SPLIT_AT)
         .select(
             F.col("wallet_address").alias("w_a"),
             F.col("interacted_with").alias("w_b"),
@@ -1401,17 +1382,18 @@ def wallet_flow_motifs_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k1").alias("ob_b"), F.col("k2").cast("date").alias("ob_day"),
         F.col("n").alias("n_out"),
     )
-    wt = wallet_transactions_delta(spark, sf_dir, since)
-    legs = wt.filter(
-        (F.col("address_role") == "sender")
-        & F.col("interacted_with").isNotNull()
-        & (F.col("current_value") > 0)
-    ).select(
-        "event_id",
-        F.col("wallet_address").alias("src"),
-        F.col("interacted_with").alias("dst"),
-        F.unix_micros("ts").alias("us"),
-        F.to_date("ts").alias("day"),
+    legs = wallet_transactions(
+        spark,
+        sf_dir,
+        [
+            "event_id",
+            F.col("wallet_address").alias("src"),
+            F.col("interacted_with").alias("dst"),
+            F.unix_micros("ts").alias("us"),
+            F.to_date("ts").alias("day"),
+        ],
+        where=F.expr(SENDER_EDGE) & (F.col("current_value") > 0),
+        since=since,
     )
     split_us = F.unix_micros(F.lit(SPLIT_AT).cast("timestamp"))
     new = legs.filter(F.col("us") >= split_us)
@@ -1461,13 +1443,13 @@ def _ensure_roll7_state(spark: SparkSession, sf_dir: str) -> str:
     def build():
         from .risk_features import wallet_rolling_distinct_7d  # noqa: F401
 
-        wt = wallet_transactions(spark, sf_dir)
         split_day = F.lit(SPLIT_AT).cast("date")
         dg = (
-            wt.filter(
-                (F.col("address_role") == "sender")
-                & F.col("interacted_with").isNotNull()
-                & (F.col("ts") < F.lit(SPLIT_AT).cast("timestamp"))
+            wallet_transactions(
+                spark,
+                sf_dir,
+                where=F.expr(SENDER_EDGE)
+                & (F.col("ts") < F.lit(SPLIT_AT).cast("timestamp")),
             )
             .select(
                 "wallet_address",
@@ -1532,11 +1514,7 @@ def wallet_rolling_distinct_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
         - _dt.timedelta(days=_ROLL7_WINDOW_DAYS - 1)
     ).isoformat()
     dg = (
-        wallet_transactions_delta(spark, sf_dir, since)
-        .filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        )
+        wallet_transactions(spark, sf_dir, where=SENDER_EDGE, since=since)
         .select(
             "wallet_address",
             F.col("interacted_with").alias("counterparty"),
@@ -1602,12 +1580,8 @@ def _ensure_pagerank_state(
     from .risk_features import wallet_pagerank  # noqa: F401 — recipe source
 
     def build():
-        wt = wallet_transactions(spark, sf_dir)
         split = F.lit(split_at).cast("timestamp")
-        legs = wt.filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        ).select(
+        legs = wallet_transactions(spark, sf_dir, where=SENDER_EDGE).select(
             F.col("wallet_address").alias("src"),
             F.col("interacted_with").alias("dst"),
             "ts",
@@ -1680,11 +1654,7 @@ def _pagerank_warm(spark: SparkSession, sf_dir: str, split_at: str) -> DataFrame
     )
 
     delta_edges = persist_tracked(
-        wallet_transactions_delta(spark, sf_dir, split_at)
-        .filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        )
+        wallet_transactions(spark, sf_dir, where=SENDER_EDGE, since=split_at)
         .select(
             F.col("wallet_address").alias("src"),
             F.col("interacted_with").alias("dst"),

@@ -9,6 +9,7 @@ value-verified, not just smoke-tested.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,7 +93,6 @@ def _ngram_capped_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped (doc, shingle) stream at the registry's
     parameters (n=3, max_df=100), computed once per (session, table)."""
     from ..operators.dedup import ngram_capped_shingles
-    from .wallet_model import _memo_storage_level
 
     with _NGRAM_LOCK:
         per_session = _NGRAM_MEMO.setdefault(spark, {})
@@ -106,7 +106,7 @@ def _ngram_capped_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx = ngram_capped_shingles(
                 docs, "doc_id", "text", n=3, max_df=100, persist=False,
                 broadcast_dims=_ngram_dims_broadcastable(sf_dir),
-            ).persist(_memo_storage_level())
+            ).persist(StorageLevel.MEMORY_AND_DISK)
             per_session[sf_dir] = idx
         return idx
 

@@ -23,16 +23,47 @@ All arithmetic is DECIMAL so Spark and the DuckDB oracle produce
 bit-identical numbers; doubles appear only at final projection.
 ``WALLET_TX_ORACLE_CTE`` is the DuckDB rendering of the exact same
 model, shared by every feature-plan oracle.
+
+Leg-source contract. ``wallet_transactions`` is the only way to read
+the legs, and every call starts from the same LAZY build:
+
+- ``since`` filters the events scan itself (mirrored onto
+  ``date_partition`` on a date-partitioned store), so a delta read
+  prunes files and never matches a cached full build.
+- ``where`` and then ``cols`` narrow the legs; ``key`` repartitions
+  them.
+- ``consumers=1`` (the default) returns that plan unpersisted: a
+  single consumer streams the build instead of paying a cache write
+  it would read once.
+- ``consumers > 1`` persists. The full-width, full-range frame goes
+  into the per-session memo (the runner's nightly share;
+  ``reset_session_memos`` drops it). Any narrowed or ``since`` frame
+  is persisted with ``caching.persist_tracked``, so the enclosing
+  ``cache_scope`` releases it.
+- Sharing needs no lookup: once the memo is persisted, Spark's
+  CacheManager substitutes it into every later lazy full-range build
+  of the same input, narrowed ones included. A ``since`` build filters
+  below the explosion, so its plan never matches and it never reads
+  the cache.
+- Immutable input: the memo records the name, size and mtime of every
+  file under ``{sf_dir}/events.parquet``. A later call for that
+  ``sf_dir`` whose files differ raises instead of serving stale legs
+  through the memo or the CacheManager; a caller that rewrites the
+  events table in-session calls ``reset_session_memos`` first.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 import weakref
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import persist_tracked
 from ..functions.scalars import VALUE_DECIMAL, bucket_key
 from ..sources.readers import read_table
 
@@ -43,126 +74,93 @@ from ..sources.readers import read_table
 # transaction_index, role_rank, event_id) is a strict total order.
 ORDER_COLS = ("ts", "priority", "transaction_index", "role_rank", "event_id")
 
+# A directed counterparty edge: the sender leg of a transfer with a
+# known receiver. Every graph family builds its edge set from it. SQL
+# text, because a Column cannot be built before a session exists;
+# ``where=`` takes it as is, and ``F.expr(SENDER_EDGE) & ...``
+# extends it.
+SENDER_EDGE = "address_role = 'sender' AND interacted_with IS NOT NULL"
 
-# Per-session memo for the role-exploded leg table: ~a dozen registry
-# queries (feature rollups, DQ gates, every window family, the
-# incremental engine) all start from the same scan → JSON-extract →
-# inline() explosion; memoizing the persisted legs per (session,
-# sf_dir) computes that base once per session instead of once per
-# query. Same discipline as llm_ops._ASSIGN_MEMO: weak session keys,
-# lock for concurrent first callers, reset_session_memos clears it so
-# the bench's isolated tier still times the real pipeline. Blacklisted
-# variants bypass the memo (different row set).
+
+# Per-session memo of the full leg table, keyed weakly by session,
+# then by sf_dir → (persisted frame, input signature at build time).
 _WT_LOCK = threading.Lock()
-_WT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+_WT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, tuple]]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def wallet_transactions(
-    spark: SparkSession, sf_dir: str, blacklist: tuple[str, ...] = ()
+    spark: SparkSession,
+    sf_dir: str,
+    cols: Sequence[str | Column] | None = None,
+    *,
+    where: str | Column | None = None,
+    since: str | None = None,
+    key: str | None = None,
+    consumers: int = 1,
 ) -> DataFrame:
-    """events → role-exploded wallet transaction legs (U3).
+    """events → role-exploded wallet transaction legs (U3), under the
+    module's leg-source contract: ``since`` bounds the scan (``ts >=
+    since``), ``where`` filters the legs, ``cols`` projects them,
+    ``key`` repartitions them, and ``consumers > 1`` persists the
+    result (the full table into the session memo, anything narrower
+    into the active ``cache_scope``).
 
-    ``blacklist`` drops pathological wallets before any window work —
-    the reference's hot-wallet guard (P8,
-    queries/ethereum_wallet_features.sql:381-390); combine with
-    ``operators.skew.salted_running_sum`` when dropping them isn't
-    acceptable.
-
-    Memo contract: the per-(session, sf_dir) memo assumes the source
-    parquet at ``sf_dir`` is IMMUTABLE for the session's lifetime (the
-    benchmark corpus is; lakehouse stores are read via generation
-    pointers instead, never through this path). If a caller rewrites
-    the events table in-session it must call ``reset_wallet_memo``
-    (or ``reset_session_memos``) first, or it will read stale legs."""
-    if blacklist:
-        return _wallet_transactions_build(spark, sf_dir, blacklist)
+    The reference's hot-wallet guard (P8,
+    queries/ethereum_wallet_features.sql:381-390) is a ``where``:
+    ``where=~F.col("wallet_address").isin(*hot)``."""
     with _WT_LOCK:
-        per_session = _WT_MEMO.setdefault(spark, {})
-        wt = per_session.get(sf_dir)
-        if wt is None:
-            wt = _wallet_transactions_build(spark, sf_dir, ()).persist(
-                _memo_storage_level()
-            )
-            per_session[sf_dir] = wt
-        return wt
+        hit = _WT_MEMO.get(spark, {}).get(sf_dir)
+    if hit is not None and hit[1] != _input_signature(sf_dir):
+        raise RuntimeError(
+            f"{sf_dir}/events.parquet changed after this session memoized "
+            "its legs; call plans.llm_ops.reset_session_memos(spark) after "
+            "rewriting an input"
+        )
+    full = cols is None and where is None and since is None and key is None
+    if consumers > 1 and full:
+        with _WT_LOCK:
+            per_session = _WT_MEMO.setdefault(spark, {})
+            if sf_dir not in per_session:
+                per_session[sf_dir] = (
+                    _build(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK),
+                    _input_signature(sf_dir),
+                )
+            return per_session[sf_dir][0]
+    wt = _build(spark, sf_dir, since)
+    if where is not None:
+        wt = wt.filter(where)
+    if cols is not None:
+        wt = wt.select(*cols)
+    if key is not None:
+        wt = wt.repartition(key)
+    return persist_tracked(wt) if consumers > 1 else wt
 
 
-def _memo_storage_level():
-    """Storage level for the leg-table memo. Default MEMORY_AND_DISK;
-    ``SPARK_GRAFT_MEMO_STORAGE=disk`` pins it to DISK_ONLY for
-    memory-tight executors — the cached explosion is the largest
-    resident block in the wallet family, and under ~1 GB/core heap at
-    100× density, keeping it off-heap-pressure is the difference
-    between spilling and an executor OOM (PLANS.md §memory-per-core)."""
-    import os
-
-    from pyspark import StorageLevel
-
-    if os.environ.get("SPARK_GRAFT_MEMO_STORAGE", "").lower() == "disk":
-        return StorageLevel.DISK_ONLY
-    return StorageLevel.MEMORY_AND_DISK
+def _input_signature(sf_dir: str) -> tuple:
+    """(path, size, mtime_ns) of every file of the events table; empty
+    for a path this process cannot stat."""
+    root = f"{sf_dir}/events.parquet"
+    paths = [root] if os.path.isfile(root) else [
+        os.path.join(d, name) for d, _, names in os.walk(root) for name in names
+    ]
+    out = []
+    for path in paths:
+        st = os.stat(path)
+        out.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def reset_wallet_memo(spark: SparkSession) -> None:
     """Drop (and unpersist) this session's memoized leg tables."""
     with _WT_LOCK:
         dropped = _WT_MEMO.pop(spark, None)
-    for df in (dropped or {}).values():
+    for df, _ in (dropped or {}).values():
         df.unpersist()
 
 
-def wallet_transactions_shared_or_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opportunistic memo read for plans that consume the legs once
-    but SHARE them when a nightly session has already materialized the
-    table: return the session's memoized leg frame if one exists for
-    this input (the runner warms it once per nightly — the deployed
-    share), else the lazy unpersisted build (a single-query context
-    cannot amortize a cache write it will read exactly once). Never
-    BUILDS the memo itself — that choice stays with callers that know
-    they fan out (``wallet_transactions``)."""
-    with _WT_LOCK:
-        hit = _WT_MEMO.get(spark, {}).get(sf_dir)
-    return hit if hit is not None else _wallet_transactions_build(spark, sf_dir, ())
-
-
-def wallet_transactions_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPERSISTED leg build for SINGLE-CONSUMER plans (VERDICT r13
-    #5): a query that streams the legs through one window/agg chain
-    exactly once should not pay the memo's InMemoryRelation
-    materialization (cache write + read-back ≈ 2× the build itself at
-    sf0.1 — measured on window_ordering, 2.0 s memo vs 1.0 s lazy).
-    Multi-consumer and iterative plans (the adaptive running sum's
-    hot-key count + branches, the graph family's edge tables) keep
-    ``wallet_transactions``' shared persisted memo."""
-    return _wallet_transactions_build(spark, sf_dir, ())
-
-
-def wallet_transactions_delta(
-    spark: SparkSession, sf_dir: str, since: str
-) -> DataFrame:
-    """Delta-only leg table for the warm (stored-prior-state) tier:
-    ``ts >= since`` applied to a LAZY, UNPERSISTED build so the
-    predicate reaches the parquet scan. The memoized
-    ``wallet_transactions`` deliberately cannot serve this — its
-    ``persist()`` puts an InMemoryRelation between the filter and the
-    scan, so a "delta" read through the memo materializes (and caches)
-    the FULL role explosion first: exactly the pre-split cost the warm
-    tier exists to avoid (the r12 local-delta probe read warm/full
-    ≥ 1 at 100× BECAUSE of this). On a date-partitioned events table
-    the pushed predicate prunes to the delta's files; on unpartitioned
-    parquet it still prunes row groups by ts stats, and only delta
-    rows pay the explosion."""
-    return _wallet_transactions_build(spark, sf_dir, (), since=since)
-
-
-def _wallet_transactions_build(
-    spark: SparkSession,
-    sf_dir: str,
-    blacklist: tuple[str, ...],
-    since: str | None = None,
-) -> DataFrame:
+def _build(spark: SparkSession, sf_dir: str, since: str | None = None) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     if since is not None:
         # Filter BELOW the projections, directly on the scan: besides
@@ -252,8 +250,6 @@ def _wallet_transactions_build(
         "current_value",
         F.inline(F.array(sender_leg, receiver_leg)),
     )
-    if blacklist:
-        wt = wt.filter(~F.col("wallet_address").isin(*blacklist))
     return wt.withColumn("address_partition", bucket_key(F.col("wallet_address")))
 
 

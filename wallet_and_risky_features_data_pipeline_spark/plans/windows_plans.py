@@ -35,8 +35,6 @@ from .wallet_model import (
     WALLET_TX_ORACLE_CTE,
     by_wallet,
     wallet_transactions,
-    wallet_transactions_lazy,
-    wallet_transactions_shared_or_lazy,
 )
 
 _KEY = ("wallet_address", "contract_address")
@@ -45,7 +43,7 @@ _KEY = ("wallet_address", "contract_address")
 # --------------------------------------------------------------------------
 # W1 + W2 — deterministic ordering and canonical-leg dedup rank
 def window_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = by_wallet(wallet_transactions_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = deterministic_order(wt, _KEY, ORDER_COLS, out="row_num_by_contract")
     df = deterministic_order(df, ("wallet_address",), ORDER_COLS, out="row_num_by_wallet")
     df = dedup_rank(df, ("wallet_address", "event_id"), ("priority",), out="hash_rank")
@@ -91,26 +89,21 @@ FROM wallet_tx
 # unchanged — salted ≡ plain is property-tested, and the two branches
 # partition the rows disjointly.
 HOT_KEY_THRESHOLD = int(os.environ.get("SPARK_GRAFT_HOT_KEY_THRESHOLD", "20000000"))
+# the running-balance families' nine leg columns
+_BALANCE_COLS = (
+    "event_id", "ts", "priority", "transaction_index", "role_rank",
+    "wallet_address", "contract_address", "address_role", "signed_value",
+)
 
 
 def window_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16: lazy wt build + persist the PROJECTED frame AFTER the
-    # by-wallet repartition — the adaptive router's three consumers
-    # (hot-key occupancy agg + both branches) read a narrow
-    # wallet-partitioned cache instead of the full-width explosion
-    # memo, and the windows/aggregate above all reuse that one
-    # exchange's layout. Equivalence-gated interleaved A/B:
-    # 2.41 → 1.38 s median (0.59×).
-    from ..caching import persist_tracked
-
-    wt = persist_tracked(
-        by_wallet(
-            wallet_transactions_shared_or_lazy(spark, sf_dir).select(
-                "event_id", "ts", "priority", "transaction_index", "role_rank",
-                "wallet_address", "contract_address", "address_role",
-                "signed_value",
-            )
-        )
+    # r16: the adaptive router's three consumers (hot-key occupancy
+    # agg + both branches) read a narrow wallet-partitioned cache
+    # instead of the full-width explosion memo, and the windows/
+    # aggregate above all reuse that one exchange's layout.
+    # Equivalence-gated interleaved A/B: 2.41 → 1.38 s median (0.59×).
+    wt = wallet_transactions(
+        spark, sf_dir, _BALANCE_COLS, key="wallet_address", consumers=3
     )
     df = adaptive_running_sum(
         wt,
@@ -193,7 +186,7 @@ def window_running_balance_eth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max(F.col("value").cast("decimal(12,4)")).alias("price"))
     )
     priced_legs = asof_join(
-        wallet_transactions_lazy(spark, sf_dir),
+        wallet_transactions(spark, sf_dir),
         prices.withColumnRenamed("event_type", "contract_address"),
         key=["contract_address"],
         event_id=["event_id"],
@@ -307,7 +300,7 @@ FROM signed
 # clusters on the same (wallet, contract) key the window sorted by, so
 # no additional exchange is needed after the window stage.
 def window_partition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = by_wallet(wallet_transactions_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = running_sum(wt, F.col("signed_value"), _KEY, ORDER_COLS, out="balance")
     return df.groupBy(*_KEY).agg(
         F.sum("signed_value").cast("double").alias("partition_total"),
@@ -348,7 +341,7 @@ GROUP BY 1, 2
 # --------------------------------------------------------------------------
 # W9 + W10 — LEAD time-to-next-event and running time-weighted AUC
 def window_lead_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = by_wallet(wallet_transactions_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = running_sum(wt, F.col("signed_value"), ("wallet_address",), ORDER_COLS, out="wallet_balance")
     df = lead_delta(
         df,
@@ -462,7 +455,7 @@ GROUP BY 1, 2
 # --------------------------------------------------------------------------
 # U3 — role double-entry explosion sanity view
 def union_role_views(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     return wt.groupBy("address_role", "transaction_type").agg(
         F.count("*").alias("legs"),
         F.sum("signed_value").cast("double").alias("net_flow"),
@@ -508,7 +501,7 @@ def union_whitelist_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("contract_address")
         .unionByName(spark.range(1).select(F.lit("purchase").alias("contract_address")))
     )
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     joined = wt.join(F.broadcast(whitelist), "contract_address")
     return joined.groupBy("contract_address", "transaction_type").agg(
         F.count(F.lit(1)).alias("legs"),
@@ -549,18 +542,10 @@ GROUP BY 1, 2
 # day bucket of the event time).
 def window_running_balance_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: salted_running_sum consumes its input TWICE (chunk windows +
-    # the per-chunk totals it joins back) — persist the projected frame
-    # after the by-wallet exchange, the window_running_balance rule.
-    from ..caching import persist_tracked
-
-    wt = persist_tracked(
-        by_wallet(
-            wallet_transactions_shared_or_lazy(spark, sf_dir).select(
-                "event_id", "ts", "priority", "transaction_index", "role_rank",
-                "wallet_address", "contract_address", "address_role",
-                "signed_value",
-            )
-        )
+    # the per-chunk totals it joins back) — the window_running_balance
+    # rule.
+    wt = wallet_transactions(
+        spark, sf_dir, _BALANCE_COLS, key="wallet_address", consumers=2
     )
     df = salted_running_sum(
         wt,

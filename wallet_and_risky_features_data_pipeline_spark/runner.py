@@ -61,7 +61,8 @@ def run_stage(spark, sf_dir: str, work_dir: str) -> None:
 def run_features(spark, sf_dir: str, work_dir: str) -> None:
     store = WatermarkStore(f"{work_dir}/watermarks.json")
     target = f"{work_dir}/features/contract_state"
-    wt = wallet_transactions(spark, sf_dir)
+    # two consumers: the state build and the watermark max below
+    wt = wallet_transactions(spark, sf_dir, consumers=2)
     wm = store.get("features_ts")
     if wm is None:
         state = contract_state_from(wt)
